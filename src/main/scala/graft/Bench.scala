@@ -103,14 +103,19 @@ object Bench {
     // Trigger it once, untimed, so no measured query pays it.
     spark.range(1).select(org.apache.spark.sql.functions.expr(
       "filter(array(lower('Warm Up')), x -> x != '')")).collect()
+    // a failed warm-up does not stop the bench, but it must not be
+    // silent: the timed pass would pay the cold path it left behind
+    def warmUp(what: String)(body: => Unit): Unit =
+      try body catch { case e: Throwable =>
+        System.err.println(s"[bench] warm-up $what failed: ${e.getMessage}")
+      }
     // Warm-up 2: the flagship freq-encode chain, untimed
-    try run(SparkEntry.queries("q4_freq_encode")) catch { case _: Throwable => () }
+    warmUp("q4_freq_encode")(run(SparkEntry.queries("q4_freq_encode")))
     // Warm-up 3: the iterative-CC and selection-percentile machinery on
     // toy inputs, untimed. Their loop/window/checkpoint code paths are
     // otherwise cold when q40/q66/q68/q95 arrive mid-manifest, and the
     // first cold pass costs 2-3x the steady state (JIT, not data).
-    try {
-      import org.apache.spark.sql.functions._
+    warmUp("connectedComponents/exactPercentiles") {
       import spark.implicits._
       val edges = (0L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
       val nodes = (0L to 65L).toDF("id")
@@ -120,15 +125,15 @@ object Bench {
       val vals = (1 to 4096).map(i => ("g", i.toDouble)).toDF("g", "v")
       graft.ops.StatOps.exactPercentiles(vals, "g", "v", Seq("p" -> 0.5))
         .write.format("noop").mode("overwrite").save()
-    } catch { case _: Throwable => () }
+    }
     // Warm-up 4: PRE-STAGE content-addressed artifacts, untimed. The
     // simhash edge list is the one expensive staged build (~15-20 s at
     // sf0.1, shared by the nine graph queries); after any change that
     // renames artifact paths (corpus regen, content-addressing scheme)
     // the first timed graph query would otherwise pay the rebuild
     // (BENCH_r09's q152 "regression" was exactly this + load).
-    try graft.ops.GraphOps.simhashDocEdges(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    warmUp("simhashDocEdges")(
+      graft.ops.GraphOps.simhashDocEdges(spark, sfDir).count())
 
     // Per-query MIN across two WARM full manifest passes (the binding
     // protocol — two full runs, per-query min — produced by the
@@ -140,7 +145,10 @@ object Bench {
     // shares between its two runs.
     def pass(): Map[String, Double] = sorted.map { case (name, fn) =>
       val t0 = System.nanoTime()
-      val ok = try { run(fn); true } catch { case _: Throwable => false }
+      val ok = try { run(fn); true } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
+      }
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }.toMap
     val warmTotal = { val t0 = System.nanoTime(); pass()

@@ -1,18 +1,92 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Central table loaders for the driver testdata (TESTDATA.md).
   *
   * All tables are parquet; reading through here keeps scans uniform so
   * Catalyst sees plain `FileSourceScanExec` nodes with pushdown-capable
   * filters (cf. reference `init.py:13`, which reads schema-inferred JSON —
-  * we read parquet with its embedded schema, which at 100 TB is the only
-  * sane choice: no inference pass, row-group pruning, column pruning).
+  * we read parquet with its embedded schema: row-group pruning, column
+  * pruning, no data scan to find the schema).
+  *
+  * Reading the embedded schema is NOT free, though: a plain
+  * `spark.read.parquet(path)` launches one Spark job that opens the
+  * footer(s) to infer the schema, every time it is called. At fixture
+  * scale a query is bound by how many jobs it launches, and these
+  * footer jobs were 9 of the 21 construction jobs of a perfbench
+  * `sql_short` pass (PERF_NOTES R13.1). [[parquet]] therefore caches
+  * the inferred schema and serves every later read as
+  * `spark.read.schema(cached).parquet(path)`, which only lists the
+  * files and runs no job. The cache key is everything that can change
+  * the read schema:
+  *  - the qualified path;
+  *  - the (name, size, mtime) of every leaf file under it
+  *    ([[graft.ops.Staging.fingerprint]]), so a file or part directory
+  *    rewritten in place misses;
+  *  - the session's value of each conf in [[schemaConfs]] (e.g.
+  *    `nanosAsLong` decides whether `events.ts` reads as LongType).
+  * Only local-filesystem paths are cached (the fingerprint walks
+  * java.nio paths); any other scheme reads uncached.
   */
 object Tables {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** Session confs that change the schema Spark infers from a parquet
+    * footer — part of every [[SchemaKey]]. */
+  private[graft] val schemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private[graft] final case class SchemaKey(path: String,
+      fingerprint: String, confs: Seq[String])
+
+  // a handful of tables and staged artifacts per corpus; the cap only
+  // bounds a long-lived JVM that reads many short-lived paths
+  private val MaxSchemas = 1024
+  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+
+  /** The cache key of a parquet read, or None for a path the cache
+    * does not cover (not on the local filesystem, or missing — the
+    * uncached read then raises Spark's own error). */
+  private[graft] def schemaKey(spark: SparkSession,
+      path: String): Option[SchemaKey] = {
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val qualified = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(hp)
+    val local = Option(qualified.toUri).filter(_.getScheme == "file")
+      .map(Paths.get(_)).filter(Files.exists(_))
+    local.map(p => SchemaKey(qualified.toString,
+      graft.ops.Staging.fingerprint(p),
+      schemaConfs.map(k => s"$k=${spark.conf.getOption(k).orNull}")))
+  }
+
+  /** `spark.read.parquet(path)` with the inferred schema cached (see
+    * the object scaladoc): only the first read of a file under a given
+    * conf runs the footer-inference job. The inference runs OUTSIDE the
+    * map (get, infer, putIfAbsent) so no map lock is held for the
+    * length of a Spark job; two racing first reads both infer and store
+    * the same schema. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) =>
+        val cached = schemas.get(key)
+        if (cached != null) spark.read.schema(cached).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          if (schemas.size >= MaxSchemas) schemas.clear()
+          schemas.putIfAbsent(key, df.schema)
+          df
+        }
+    }
 
   /** Restore scan parallelism for compute-heavy pipelines.
     *

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Cleaning / projection primitives (SURVEY.md §2.2-2.3).
   *
@@ -37,9 +36,6 @@ object CleanOps {
     df.withColumn(s"${prefix}year", year(col(tsCol)))
       .withColumn(s"${prefix}month", month(col(tsCol)))
       .withColumn(s"${prefix}day", dayofmonth(col(tsCol)))
-
-  /** string → timestamp cast (`timely_LR.py:57`). */
-  def toTimestamp(c: Column): Column = c.cast(TimestampType)
 
   /** P13 — drop the first `n` rows under a total ordering: the
     * plan-preserving form of the reference's header-skip detour

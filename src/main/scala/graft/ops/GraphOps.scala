@@ -93,7 +93,7 @@ object GraphOps {
         Staging.sweepStale(stage, "edges", src)
       }
     }
-    s.read.parquet(edgeDir.toString)
+    Tables.parquet(s, edgeDir.toString)
   }
 
   private val edgeCacheLock = new Object

@@ -65,7 +65,7 @@ object ExtensionQueries {
         Paths.get(s"$dir/events.parquet").toAbsolutePath)
     val path = srcDir.toString
     Tables.eventsNormalize(
-      s.readStream.schema(s.read.parquet(path).schema).parquet(path))
+      s.readStream.schema(Tables.parquet(s, path).schema).parquet(path))
   }
 
   /** Pin the state fan-out of a bounded streaming replay: stateful
@@ -730,7 +730,7 @@ object ExtensionQueries {
     Files.setLastModifiedTime(sentinel,
       java.nio.file.attribute.FileTime.fromMillis(srcM.toMillis + 60000))
     Tables.eventsNormalize(
-      s.readStream.schema(s.read.parquet(srcDir.toString).schema)
+      s.readStream.schema(Tables.parquet(s, srcDir.toString).schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
   }
 
@@ -797,7 +797,7 @@ object ExtensionQueries {
           srcM.toMillis + 60000L * (i + 1)))
     }
     Tables.eventsNormalize(
-      s.readStream.schema(s.read.parquet(srcDir.toString).schema)
+      s.readStream.schema(Tables.parquet(s, srcDir.toString).schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir.toString))
   }
 
