@@ -44,40 +44,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      // parallelismFirst stays at its default TRUE: the byte-advisory
-      // alternative (parallelismFirst=false) was A/B'd in round 4 and
-      // LOST 156 -> 240 s — small-byte/high-CPU reduce stages (the
-      // md5/intersection verify joins: q95 3.7 -> 22.7 s) coalesce to
-      // ~1 partition and serialize. Bytes are a bad proxy for work in
-      // compute-dense stages; see PERF_NOTES R4.3.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // events.parquet carries TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // ObjectHashAggregate's sort-based fallback fires at 128 DISTINCT
-      // KEYS per partition and then writes every remaining input row to
-      // disk as its own (key, buffer) pair — for the k-bounded TopKAgg
-      // family that silently turns O(groups × k) map-side combine into
-      // an O(rows) external sort (q400's sf1 cross product spilled
-      // >80 GB). Raised far above any manifest group count; bounded
-      // buffers (~300 B) keep the worst-case map at ~300 MB. See
-      // TopKAgg scaladoc + PERF_NOTES R10.5 for the sizing rule.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      // the generated-class cache defaults to 100 entries — a 415-query
-      // manifest evicts everything between a query's two pass
-      // executions, so every run would pay full Janino compilation
-      // (~0.2-0.7 s uniform additive cost, measured: pass structure
-      // without this conf ran a 1.5x slower bench). Sized to hold the
-      // whole manifest: pass 1 compiles, pass 2 measures warm.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.create(cpus)
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -95,20 +63,13 @@ object Bench {
       catch { case _: Throwable => -1.0 }
     val loadStart = loadAvg()
 
-    // Warm-up 1: any lower() evaluated on the interpreted path (i.e.
-    // inside a CodegenFallback higher-order function) dispatches through
-    // CollationSupport→CollationAwareUTF8String, whose static init
-    // builds ICU case-mapping tables — tens of seconds of CPU when the
-    // JIT is cold/saturated, serialized under the class-init monitor.
-    // Trigger it once, untimed, so no measured query pays it.
-    spark.range(1).select(org.apache.spark.sql.functions.expr(
-      "filter(array(lower('Warm Up')), x -> x != '')")).collect()
     // a failed warm-up does not stop the bench, but it must not be
     // silent: the timed pass would pay the cold path it left behind
     def warmUp(what: String)(body: => Unit): Unit =
       try body catch { case e: Throwable =>
         System.err.println(s"[bench] warm-up $what failed: ${e.getMessage}")
       }
+    // Warm-up 1 (the ICU case-mapping tables) ran in GraftSession.create.
     // Warm-up 2: the flagship freq-encode chain, untimed
     warmUp("q4_freq_encode")(run(SparkEntry.queries("q4_freq_encode")))
     // Warm-up 3: the iterative-CC and selection-percentile machinery on
@@ -139,8 +100,8 @@ object Bench {
     // protocol — two full runs, per-query min — produced by the
     // artifact itself). Pass 0 runs the whole manifest UNTIMED: it
     // compiles every plan's generated classes into the (manifest-sized,
-    // see conf above) codegen cache and absorbs per-query JIT, so both
-    // timed passes measure steady state; pass separation (~6 min)
+    // see GraftSession.confs) codegen cache and absorbs per-query JIT,
+    // so both timed passes measure steady state; pass separation (~6 min)
     // decorrelates the contention spikes that back-to-back min-of-2
     // shares between its two runs.
     def pass(): Map[String, Double] = sorted.map { case (name, fn) =>

@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Plan-evidence dump (optimization-round deliverable): writes
@@ -18,17 +17,7 @@ object ExplainDump {
     val outDir = args(0)
     val suffix = args(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.create()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
     val names =

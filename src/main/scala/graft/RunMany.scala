@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Profiling harness: run SEVERAL named queries in one JVM with the
   * Bench session config, interleaved round-robin for `nPasses` passes
@@ -15,18 +14,7 @@ object RunMany {
     val passes = args(0).toInt
     val names = args.drop(1).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val mins = scala.collection.mutable.Map[String, Double]()
     (0 to passes).foreach { pass =>
       names.foreach { name =>

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Profiling harness: run ONE named query (default sf0.1) with the same
   * session config as Bench, fully materialized through noop, and print
@@ -13,25 +12,7 @@ object RunOne {
     val name = args(0)
     val runs = if (args.length > 1) args(1).toInt else 3
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    // profiling knob: decouple shuffle fan-out from core count
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // k-bounded TopKAgg buffers must stay in hash mode or partial
-      // aggregation degrades to an O(rows) disk sort (TopKAgg scaladoc;
-      // PERF_NOTES R10.5)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.range(1).select(org.apache.spark.sql.functions.expr(
-      "filter(array(lower('Warm Up')), x -> x != '')")).collect()
+    val spark = GraftSession.create()
     val fn = SparkEntry.queries(name)
     (1 to runs).foreach { i =>
       val t0 = System.nanoTime()

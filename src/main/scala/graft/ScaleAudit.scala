@@ -28,21 +28,7 @@ object ScaleAudit extends AdaptiveSparkPlanHelper {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val out = if (args.length > 1) args(1) else "target/scale_audit.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see TopKAgg scaladoc + PERF_NOTES R10.5: without this the
-      // audit would measure the fallback's O(rows) spill, not the plan
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     // Task-metrics accumulator: onTaskEnd carries the authoritative
     // per-task TaskMetrics (StageInfo aggregation is listener-timing

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Measurement fixture generator (judge verdict r9 "Next round" #4):
@@ -27,9 +26,9 @@ import org.apache.spark.sql.functions._
   * all scaled tables). `tables` is a comma list restricting which
   * tables are SCALED (the rest symlink from srcDir) — composing runs
   * stacks decades: src=target/fixtures/sf1 tables=events,orders gives
-  * an sf10-equivalent of just the stream/order tables for
-  * WindowShapeProbe's crossover measurement without 1 GB of unused
-  * lineitem copies.
+  * an sf10-equivalent of just the stream/order tables for the
+  * sharded-window crossover measurement (PERF_NOTES R11.3) without
+  * 1 GB of unused lineitem copies.
   */
 object Sf1Fixture {
   def main(args: Array[String]): Unit = {
@@ -39,11 +38,7 @@ object Sf1Fixture {
     val only: Set[String] =
       if (args.length > 3) args(3).split(",").toSet
       else Set("lineitem", "documents", "embeddings", "events", "orders")
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(cpus = 16)
     import java.nio.file.{Files, Paths}
     val outPath = Paths.get(out)
     graft.ops.Staging.deleteRecursively(outPath)
@@ -88,8 +83,8 @@ object Sf1Fixture {
       }.reduce(_ unionByName _)
     }
 
-    // events + orders scaled since round 11 (WindowShapeProbe's decade
-    // evidence for the sharded-window rewrites reads them): primary
+    // events + orders scaled since round 11 (the decade evidence for
+    // the sharded-window rewrites reads them, PERF_NOTES R11.3): primary
     // keys shift, FK columns (user_id, o_custkey) stay — per-entity
     // cardinality grows 10x, the realistic "rate grows, horizon fixed"
     // shape for calendar-framed queries; measure columns get

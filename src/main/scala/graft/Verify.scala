@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Correctness dump: each SparkEntry.queries result → parquet, plus
   * oracle_sql.json, for the DuckDB compare (tools/compare_oracle.py).
@@ -10,25 +9,7 @@ object Verify {
     // optional extra args: run only the named queries (iteration aid);
     // oracle_sql.json is still written in full for the driver
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "16k")
-      // events.parquet carries TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // k-bounded TopKAgg buffers must stay in hash mode or partial
-      // aggregation degrades to an O(rows) disk sort (TopKAgg scaladoc;
-      // PERF_NOTES R10.5)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // pre-trigger ICU CollationAwareUTF8String static init (see Bench)
-    spark.range(1).select(org.apache.spark.sql.functions.expr(
-      "filter(array(lower('Warm Up')), x -> x != '')")).collect()
+    val spark = GraftSession.create()
     new java.io.File(outDir).mkdirs()
     // a failed query does not stop the dump (every other output and
     // oracle_sql.json are still written), but it fails the run below

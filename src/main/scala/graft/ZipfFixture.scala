@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement fixture generator (judge verdict r8 "Next round" #6):
   * a REALISTIC-vocabulary documents table for profiling the dedup
   * family, staged under target/fixtures. The driver-generated
@@ -73,10 +71,7 @@ object ZipfFixture {
       (i.toLong, text, langs(i % langs.length), s"src${i % 8}",
         text.length.toLong)
     }
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create(cpus = 8)
     import spark.implicits._
     import java.nio.file.{Files, Paths}
     val outPath = Paths.get(out)

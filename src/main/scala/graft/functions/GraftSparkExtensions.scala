@@ -26,10 +26,34 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     // planner extension: AsofJoinNode → AsofJoinExec (native sort-merge
     // as-of join, see graft.plans.AsofJoin)
     ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
+    // reads the fallbackThreshold when a session's analyzer is built and
+    // warns, once per JVM, if it is below what the k-bounded aggregates
+    // assume; the rule itself checks no plan
+    ext.injectCheckRule { session =>
+      GraftSparkExtensions.fallbackWarning(
+        session.sessionState.conf.objectAggSortBasedFallbackThreshold)
+        .filter(_ => GraftSparkExtensions.fallbackWarned.compareAndSet(false, true))
+        .foreach(org.slf4j.LoggerFactory
+          .getLogger(classOf[GraftSparkExtensions]).warn(_))
+      _ => ()
+    }
   }
 }
 
 object GraftSparkExtensions {
+  private val fallbackWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** The warning for a session whose ObjectHashAggregate sort-based
+    * fallback threshold is below [[graft.GraftSession.FallbackThreshold]],
+    * if it is. */
+  def fallbackWarning(threshold: Int): Option[String] =
+    if (threshold >= graft.GraftSession.FallbackThreshold) None
+    else Some(s"spark.sql.objectHashAggregate.sortBased.fallbackThreshold " +
+      s"is $threshold, below ${graft.GraftSession.FallbackThreshold}: " +
+      "TopKAgg, MisraGries, CountMin and KMV fall back to an O(rows) " +
+      "disk sort once a partition sees more groups than that " +
+      "(build the session with graft.GraftSession)")
+
   type FnDef = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
   private def litInt(e: Expression, what: String): Int = {

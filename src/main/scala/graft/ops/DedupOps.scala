@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.GraftSession
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -920,9 +921,7 @@ object DedupOps {
     // negative result); big graphs grow by rows. coalesce() is narrow
     // (no re-shuffle of the already-checkpointed blocks), and count()
     // on a checkpointed frame is a cache scan, not a recompute.
-    val nEdges = symRaw.count()
-    val loopParts = math.max(math.min(sc.defaultParallelism, 8),
-      (nEdges / 2000000L).toInt + 1)
+    val loopParts = GraftSession.loopParts(nodes.sparkSession, symRaw.count())
     val sym = symRaw.coalesce(loopParts)
     // The rounds' own exchanges (join + min-agg reduce sides) must
     // follow the same sizing: AQE under parallelismFirst pins them to
@@ -931,10 +930,8 @@ object DedupOps {
     // planning for the iteration happens inside this function. The
     // engine contract is one logical query per session at a time, so
     // the scoped conf cannot leak into a concurrently-planned plan.
-    val session = nodes.sparkSession
-    val prevShuffle = session.conf.get("spark.sql.shuffle.partitions")
-    session.conf.set("spark.sql.shuffle.partitions", loopParts)
-    val finalLabels = try {
+    val finalLabels = GraftSession.withConf(nodes.sparkSession,
+        "spark.sql.shuffle.partitions" -> loopParts.toString) {
     // initialization folds the FIRST propagation step in for free:
     // label(v) = min(v, min neighbor) needs exactly the same groupBy
     // that the distinct endpoint set needs, so round 1 starts one step
@@ -1001,7 +998,7 @@ object DedupOps {
       System.err.println(s"[cc] converged in $i rounds")
     release(symIds) // labels is checkpointed; the edge blocks are dead too
     labels
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     // output contract: only ids present in `nodes` (out-of-`nodes`
     // endpoints participated in propagation above but are dropped here).
     // These joins are planned at the CALLER's action, after the restore,

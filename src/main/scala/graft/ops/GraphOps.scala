@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Shared scaffolding for the graph-analytics family (PageRank q172,
   * label propagation q280, k-core q286, triangles q152, clustering
@@ -138,13 +138,9 @@ object GraphOps {
     // aggregates planned later at the session's own fan-out.
     val session = sym.sparkSession
     val edges0 = sym.localCheckpoint()
-    val nEdges = edges0.count()
-    val loopParts = math.max(
-      math.min(session.sparkContext.defaultParallelism, 8),
-      (nEdges / 2000000L).toInt + 1)
-    val prevShuffle = session.conf.get("spark.sql.shuffle.partitions")
-    session.conf.set("spark.sql.shuffle.partitions", loopParts)
-    val census = try {
+    val loopParts = GraftSession.loopParts(session, edges0.count())
+    val census = GraftSession.withConf(session,
+        "spark.sql.shuffle.partitions" -> loopParts.toString) {
       val init = (edges0.coalesce(loopParts), Vector.empty[DataFrame])
       val (_, acc) = unrolledRounds(init, rounds) {
         case ((edges, accIn), r) =>
@@ -162,7 +158,7 @@ object GraphOps {
           (next, accIn :+ row)
       }
       acc
-    } finally session.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     census.reduce(_ unionByName _)
   }
 

@@ -643,8 +643,8 @@ object StatOps {
     * in one shard, so when the key has few distinct values the largest
     * block — modal-fraction × |group| rows, corpus-proportional — lands
     * in ONE task no matter how large `nShards` is (found by the
-    * round-11 WindowShapeProbe decade run on q250's ~90-value
-    * token-count key; a Zipf vocabulary's count-1 block is the extreme
+    * round-11 decade run on q250's ~90-value token-count key,
+    * PERF_NOTES R11.3; a Zipf vocabulary's count-1 block is the extreme
     * case, ~half the vocabulary in one tie block).
     *
     * Decomposition: `row_number` over `(orderCol ASC, tieCol ASC)` per

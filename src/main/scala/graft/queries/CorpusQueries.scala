@@ -394,20 +394,13 @@ object CorpusQueries {
     * tolerance-flagged; `LabelNoiseSpec` additionally bounds the
     * bucketed screen's consensus drift against the exact kNN form.
     */
-  def q232LabelNoise(s: SparkSession, dir: String): DataFrame =
-    labelNoiseScreen(s, dir, bits = 4)
-
-  /** q232's body with the SRP bit-count as a parameter. The manifest
-    * query pins bits = 4 (the oracle replays those 4 md5 planes
-    * exactly); [[graft.SrpProbe]] drives the same plan at other bit
-    * counts to demonstrate the density rule the scaladoc states —
-    * bucket population is n/2^bits, within-bucket pair work is
-    * n²/2^bits, so holding BITS fixed across a 10× corpus growth costs
-    * ~100× pair work where bits += log₂(10) ≈ 3-4 holds it constant
-    * (measured: PERF_NOTES R10.4).
-    */
-  private[graft] def labelNoiseScreen(s: SparkSession, dir: String,
-      bits: Int): DataFrame = {
+  def q232LabelNoise(s: SparkSession, dir: String): DataFrame = {
+    // the oracle replays exactly these 4 md5 planes. Bucket population
+    // is n/2^bits and within-bucket pair work n²/2^bits, so holding
+    // bits fixed across a 10× corpus growth costs ~100× pair work where
+    // bits += log₂(10) ≈ 3-4 holds it constant (measured: PERF_NOTES
+    // R10.4)
+    val bits = 4
     graft.functions.GraftSparkExtensions.register(s)
     val emb = Tables.embeddings(s, dir)
       .withColumn("bucket", VectorOps.srpBucket(col("embedding"), 64, bits))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ops._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -420,14 +420,10 @@ object ExperimentQueries {
     // 32-wide with per-task fixed costs dominating a small graph. The
     // lab checkpoint makes the rounds execute eagerly under the
     // scoped override; the community rollup plans after the restore.
-    val nEdges = symRaw.count()
-    val loopParts = math.max(
-      math.min(s.sparkContext.defaultParallelism, 8),
-      (nEdges / 2000000L).toInt + 1)
+    val loopParts = GraftSession.loopParts(s, symRaw.count())
     val sym = symRaw.coalesce(loopParts)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", loopParts)
-    val lab = try {
+    val lab = GraftSession.withConf(s,
+        "spark.sql.shuffle.partitions" -> loopParts.toString) {
       val init = sym.select(col("src").as("node")).distinct()
         .withColumn("lbl", col("node"))
       GraphOps.unrolledRounds(init, 4) { (l, _) =>
@@ -436,7 +432,7 @@ object ExperimentQueries {
         l.unionByName(nb)
           .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
       }.localCheckpoint()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     lab.groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_members"))
       .filter(col("n_members") >= 2)
@@ -468,14 +464,10 @@ object ExperimentQueries {
     // scoped override covers the rounds' planning+execution (the lab
     // checkpoint below is eager); downstream joins plan at the
     // session's own fan-out after the restore.
-    val nEdges = symRaw.count()
-    val loopParts = math.max(
-      math.min(s.sparkContext.defaultParallelism, 8),
-      (nEdges / 2000000L).toInt + 1)
+    val loopParts = GraftSession.loopParts(s, symRaw.count())
     val sym = symRaw.coalesce(loopParts)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", loopParts)
-    val lab = try {
+    val lab = GraftSession.withConf(s,
+        "spark.sql.shuffle.partitions" -> loopParts.toString) {
       val init = sym.select(col("src").as("node")).distinct()
         .withColumn("lbl", col("node"))
       GraphOps.unrolledRounds(init, 4) { (l, _) =>
@@ -484,7 +476,7 @@ object ExperimentQueries {
         l.unionByName(nb)
           .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
       }.localCheckpoint() // endpoint joins + degree join read this
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("__deg"))
     val m = sym.agg((count(lit(1)) / lit(2.0)).as("__m"))
     val la = lab.select(col("node").as("__na"), col("lbl").as("__la"))
@@ -811,7 +803,7 @@ object ExperimentQueries {
           lit(6.0)).cast("long").as("tier"))
     val src = ExtensionQueries.eventsFileStream(s, dir, "q289")
       .select(col("user_id"), col("value"))
-    val q = ExtensionQueries.withStreamShuffle(s, 8) {
+    val q = ExtensionQueries.withStreamShuffle(s) {
       src.join(broadcast(dim), Seq("user_id"))
         .groupBy(col("tier"))
         .agg(count(lit(1)).as("n_events"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ops.{DedupOps, EventOps, TextOps, VectorOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -78,11 +78,8 @@ object ExtensionQueries {
     * production state volumes the right number is larger, sized to
     * state-per-executor memory, not core count.
     */
-  private[queries] def withStreamShuffle[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
+  private[queries] def withStreamShuffle[T](s: SparkSession)(body: => T): T =
+    GraftSession.withConf(s, "spark.sql.shuffle.partitions" -> "8")(body)
 
   def q142StreamHourly(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.{OutputMode, Trigger}
@@ -90,7 +87,7 @@ object ExtensionQueries {
     scala.util.Try(s.catalog.dropTempView(sink))
     val src = eventsFileStream(s, dir, "q142")
       .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       graft.streaming.StreamingOps.hourlyAggStream(src)
         .writeStream.format("memory").queryName(sink)
         .outputMode(OutputMode.Complete())
@@ -122,7 +119,7 @@ object ExtensionQueries {
     scala.util.Try(s.catalog.dropTempView(sink))
     val src = eventsFileStream(s, dir, "q218")
       .select(col("ts"), col("event_type"), col("value"))
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       src
         .groupBy(col("event_type"), window(col("ts"), "1 day").as("__w"))
         .agg(count(lit(1)).as("cnt"), sum(col("value")).as("sum_v"),
@@ -170,7 +167,7 @@ object ExtensionQueries {
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .as[graft.streaming.StreamingOps.Event]
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       graft.streaming.StreamingOps.sessionizeStream(stream, 30)
         .toDF()
         .writeStream.format("memory").queryName(sink)
@@ -613,7 +610,7 @@ object ExtensionQueries {
     scala.util.Try(s.catalog.dropTempView(sink))
     val src = eventsFileStream(s, dir, "q168")
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       graft.streaming.StreamingOps.dedupStream(src,
           Seq("user_id", "event_type"))
         .writeStream.format("memory").queryName(sink)
@@ -651,7 +648,7 @@ object ExtensionQueries {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     val views = src.filter(col("event_type") === "view").drop("event_type")
     val buys = src.filter(col("event_type") === "purchase").drop("event_type")
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       graft.streaming.StreamingOps
         .intervalJoinStream(views, buys, "user_id", withinSeconds = 3600L)
         .writeStream.format("memory").queryName(sink)
@@ -828,7 +825,7 @@ object ExtensionQueries {
     val src = eventsTwoBatchStream(s, dir, "q369")
       .filter(col("user_id") >= 0)
       .select(col("event_type"), col("user_id"))
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       src.dropDuplicates("event_type", "user_id")
         .writeStream.format("memory").queryName(sink)
         .option("checkpointLocation", ckpt)
@@ -876,12 +873,11 @@ object ExtensionQueries {
     implicit val utEnc = org.apache.spark.sql.Encoders
       .product[StreamingOps.UserTotals]
     val typed = src.as[StreamingOps.UserValue]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.get(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val q = withStreamShuffle(s, 8) {
+    GraftSession.withConf(s,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider")) {
+      val q = withStreamShuffle(s) {
         typed.groupByKey(_.user_id)
           .transformWithState(new StreamingOps.RunningTotalsProcessor,
             TimeMode.None(), OutputMode.Update())
@@ -890,7 +886,7 @@ object ExtensionQueries {
           .trigger(Trigger.AvailableNow()).start()
       }
       q.awaitTermination()
-    } finally s.conf.set(provKey, prevProv)
+    }
     s.table(sink)
       .groupBy(col("user_id"))
       .agg(max(struct(col("n_events"), col("total_value"))).as("__f"))
@@ -933,12 +929,11 @@ object ExtensionQueries {
     implicit val outEnc = org.apache.spark.sql.Encoders
       .product[StreamingOps.SessionFinal]
     val typed = src.as[StreamingOps.UserTsValue]
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = s.conf.get(provKey)
-    s.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val q = withStreamShuffle(s, 8) {
+    GraftSession.withConf(s,
+        "spark.sql.streaming.stateStore.providerClass" ->
+          ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider")) {
+      val q = withStreamShuffle(s) {
         typed.groupByKey(_.user_id)
           .transformWithState(
             new StreamingOps.SessionTimerProcessor(1800000L),
@@ -948,7 +943,7 @@ object ExtensionQueries {
           .trigger(Trigger.AvailableNow()).start()
       }
       q.awaitTermination()
-    } finally s.conf.set(provKey, prevProv)
+    }
     s.table(sink)
       .select(col("user_id"), col("n_events"),
         (round(col("total_value"), 2) + lit(0.0)).as("total_value"))
@@ -976,7 +971,7 @@ object ExtensionQueries {
     val src = eventsLateReplayStream(s, dir, "q336")
       .filter(col("event_id") >= 0)
       .select(col("ts"), col("event_id"))
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       src.withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n_events"))
@@ -1009,7 +1004,7 @@ object ExtensionQueries {
     val src = eventsLateReplayStream(s, dir, "q337")
       .filter(col("user_id") >= 0)
       .select(col("ts"), col("user_id"), col("event_type"))
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       src.withWatermark("ts", "10 minutes")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .writeStream.format("memory").queryName(sink)
@@ -1031,7 +1026,7 @@ object ExtensionQueries {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     val views = src.filter(col("event_type") === "view").drop("event_type")
     val buys = src.filter(col("event_type") === "purchase").drop("event_type")
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       graft.streaming.StreamingOps
         .intervalJoinStream(views, buys, "user_id", withinSeconds = 3600L,
           joinType = "leftOuter")
@@ -1087,7 +1082,7 @@ object ExtensionQueries {
     val src = eventsTwoBatchStream(s, dir, "q334")
       .filter(col("user_id") >= 0)
       .select(col("event_type"), col("value"))
-    val q = withStreamShuffle(s, 8) {
+    val q = withStreamShuffle(s) {
       src.writeStream
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame,
             id: Long) =>

@@ -586,7 +586,7 @@ object PipelineQueries {
           .as(s"p0_$tag"))
     val sink = "q419_sink"
     scala.util.Try(s.catalog.dropTempView(sink))
-    val q = ExtensionQueries.withStreamShuffle(s, 8) {
+    val q = ExtensionQueries.withStreamShuffle(s) {
       score(s.readStream.schema(test.schema).parquet(srcPath), "s")
         .writeStream.format("memory").queryName(sink)
         .outputMode(OutputMode.Append())

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.ops.VectorOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -882,16 +882,10 @@ object StructuralQueries {
     e.write.mode("overwrite").partitionBy("day").parquet(path)
     val patch = e.filter(col("day") === "2024-01-15")
       .withColumn("value", col("value") * 2)
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    // Try-snapshot like q338: a previously-UNSET conf must be restored
-    // by unset(), not pinned to the default's current spelling.
-    val prev = scala.util.Try(s.conf.get(key)).toOption
-    s.conf.set(key, "dynamic")
-    try patch.write.mode("overwrite").partitionBy("day").parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+    // a writer option, not the session conf: the mode changes the
+    // RESULT of an overwrite, so it must not leak into other writes
+    patch.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("day").parquet(path)
     s.read.parquet(path)
       .groupBy((col("day") === "2024-01-15").as("patched"))
       .agg(count(lit(1)).as("n"),
@@ -943,13 +937,9 @@ object StructuralQueries {
     * oracle-checked.
     */
   def q338RuntimeBloomJoin(s: SparkSession, dir: String): DataFrame = {
-    val confs = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.map { case (k, _) =>
-      k -> scala.util.Try(s.conf.get(k)).toOption }
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+    GraftSession.withConf(s,
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_extendedprice"),
           col("l_quantity"))
@@ -965,9 +955,6 @@ object StructuralQueries {
         .orderBy(col("o_orderpriority"))
       df.queryExecution.optimizedPlan // force injection under the confs
       df
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 
@@ -1333,10 +1320,7 @@ object StructuralQueries {
     */
   def q389SqlScripting(s: SparkSession, dir: String): DataFrame = {
     Tables.orders(s, dir).createOrReplaceTempView("orders_q389")
-    val key = "spark.sql.scripting.enabled"
-    val prev = scala.util.Try(s.conf.get(key)).toOption
-    s.conf.set(key, "true")
-    try s.sql(
+    GraftSession.withConf(s, "spark.sql.scripting.enabled" -> "true")(s.sql(
       """BEGIN
         |  DECLARE mu DOUBLE DEFAULT 0;
         |  DECLARE i INT DEFAULT 0;
@@ -1350,11 +1334,7 @@ object StructuralQueries {
         |    (round(mu, 2) + 0.0) AS trimmed_mu
         |  FROM orders_q389 WHERE o_totalprice <= mu
         |  GROUP BY o_orderpriority ORDER BY o_orderpriority;
-        |END""".stripMargin)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
+        |END""".stripMargin))
   }
 
 

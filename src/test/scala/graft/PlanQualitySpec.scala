@@ -74,18 +74,12 @@ class PlanQualitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // the split adds a (harmless) extra shuffle before the grp agg;
       // without force, AQE's cost check vetoes it
       "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true")
-    val prev = confs.map { case (k, _) =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    GraftSession.withConf(spark, confs: _*) {
       val df = SparkEntry.queries("q388_skew_join")(
         spark, "/root/testdata/sf0.01")
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("skew=true"), plan.take(4000))
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -901,10 +895,8 @@ class PlanQualitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("DecorrelatedRankLimit honors the windowGroupLimitThreshold " +
     "kill switch (-1 disables the rewrite, like the built-in rule)") {
     import org.apache.spark.sql.execution.window.WindowGroupLimitExec
-    val key = "spark.sql.optimizer.windowGroupLimitThreshold"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try {
+    GraftSession.withConf(spark,
+        "spark.sql.optimizer.windowGroupLimitThreshold" -> "-1") {
       val df = SparkEntry.queries("q392_sql_table_fn")(spark, sf0001)
       val limits = collectWithSubqueries(df.queryExecution.executedPlan) {
         case g: WindowGroupLimitExec => g
@@ -912,6 +904,6 @@ class PlanQualitySpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(limits.isEmpty,
         "the injected rule must respect the same kill switch as " +
           "InferWindowGroupLimit")
-    } finally spark.conf.set(key, prev)
+    }
   }
 }

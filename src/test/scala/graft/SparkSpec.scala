@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local SparkSession for all specs. One JVM-wide session (local[4],
-  * tiny shuffle fan-out) keeps the suite seconds-fast; tests must not
+/** Shared local SparkSession for all specs: the production
+  * [[GraftSession]] on local[4], with a temporary warehouse. One
+  * JVM-wide session keeps the suite seconds-fast; tests must not
   * mutate global session state.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -15,30 +16,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // functions AND the optimizer rule (IntersectCountRewrite):
-      // injectOptimizerRule only applies at session build, unlike the
-      // runtime function registration below
-      .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      // events.parquet carries TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // k-bounded TopKAgg buffers must stay in hash mode (TopKAgg
-      // scaladoc; PERF_NOTES R10.5)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1048576")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession.create(cpus = 4, warehouseDir =
+      Some(java.nio.file.Files.createTempDirectory("graft_wh").toString))
     // native graft functions resolvable from any spec (idempotent)
     graft.functions.GraftSparkExtensions.register(s)
-    // pre-trigger ICU CollationAwareUTF8String static init (see Bench)
-    s.range(1).select(org.apache.spark.sql.functions.expr(
-      "filter(array(lower('Warm Up')), x -> x != '')")).collect()
     s
   }
 }
